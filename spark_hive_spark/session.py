@@ -38,6 +38,14 @@ _DEFAULT_CONF: dict[str, str] = {
     # convert in tables._read (Spark has no nanos timestamp type).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.compression.codec": "zstd",
+    # Generated-class cache (static conf: only a session this factory
+    # builds gets it). One pass of eight TPC-H-style queries compiles
+    # ~135 classes, more than the default 100 entries, so with LRU
+    # eviction every repeat of the pass recompiled them all (Janino
+    # compile plus HotSpot re-JIT of the fresh classes; together about
+    # 40% of a repeated pass on a 4-vCPU host). 1000 leaves room for
+    # several such mixes; held classes cost metaspace, not heap.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     # One BLAS/OpenMP thread per Python worker: Spark already runs one
     # worker per core, so library-level threading inside the GEMM
     # mapInPandas kernels (similarity/multimodal/pipeline) only

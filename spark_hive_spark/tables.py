@@ -20,6 +20,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -67,19 +68,52 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     the grading driver builds its own, without session.py's conf block
     — and the loader must work on all of them. The conf is
     runtime-settable and only affects parquet reads planned after the
-    set, which is exactly the read below.
+    set, which is exactly the read below. It is set on every call, so a
+    caller that unsets it between reads still gets its nanos converted.
 
     The nanos defense is applied to EVERY known timestamp column, not
     just events.ts: the fixture generator has already flipped one
     column's physical type between rounds, and any of the date
     columns could be next — a bigint read (nanos-as-long) converts,
-    anything already timestamp-typed passes through untouched."""
+    anything already timestamp-typed passes through untouched.
+
+    Schema memo: ``spark.read.parquet(path)`` launches a Spark job to
+    infer the schema from the footer, which costs more than scanning a
+    small fixture. Each file's inferred schema, plus the bigint columns
+    whose footer check passed, is kept in ``_SCHEMAS`` keyed on file
+    identity ``(path, st_mtime_ns, st_size)``; later calls read with
+    ``spark.read.schema(s)``, which launches no job and skips the footer
+    re-read. A rewritten file changes the key and is inferred afresh; a
+    file whose footer check fails is never memoised, so the refusal
+    fires on every call. The memo holds schemas, not DataFrames: each
+    call must return a fresh relation with fresh attribute ids, or a
+    query joining two reads of one table could not tell their columns
+    apart. A path the driver cannot stat is inferred on every call."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = table_path(sf_dir, name)
-    df = spark.read.parquet(path)
-    for col in _TS_COLS.get(name, ()):
-        if col in df.columns and df.schema[col].dataType.simpleString() == "bigint":
-            df = df.withColumn(col, _ns_bigint_to_ts(path, col))
+    try:
+        st = os.stat(path)
+        key = (path, st.st_mtime_ns, st.st_size)
+    except OSError:
+        key = None
+    memo = _SCHEMAS.get(key)
+    if memo is None:
+        schema = spark.read.parquet(path).schema
+        ns_cols = tuple(
+            col
+            for col in _TS_COLS.get(name, ())
+            if col in schema.names
+            and schema[col].dataType.simpleString() == "bigint"
+        )
+        for col in ns_cols:
+            _check_ns_footer(path, col)
+        memo = (schema, ns_cols)
+        if key is not None:
+            _SCHEMAS[key] = memo
+    schema, ns_cols = memo
+    df = spark.read.schema(schema).parquet(path)
+    for col in ns_cols:
+        df = df.withColumn(col, _nanos_to_ts(col))
     if name == "events":
         df = df.withColumn("ts", _normalize_event_ts(df, path=path))
     return df
@@ -111,13 +145,12 @@ def _footer_type(path: str, col: str) -> str:
     return ""
 
 
-def _ns_bigint_to_ts(path: str, col: str):
-    """Column expr converting a nanosAsLong bigint back to TIMESTAMP —
-    but only after the parquet footer confirms the column really is
-    TIMESTAMP(NANOS). A fixture that legitimately shipped a plain int64
-    (epoch micros/millis/days) would be silently mis-scaled 1000x by an
-    unconditional `div 1000`, so an unrecognized footer type fails
-    loudly instead of guessing."""
+def _check_ns_footer(path: str, col: str) -> None:
+    """Refuse a bigint column unless the parquet footer confirms it
+    really is TIMESTAMP(NANOS). A fixture that legitimately shipped a
+    plain int64 (epoch micros/millis/days) would be silently mis-scaled
+    1000x by an unconditional `div 1000`, so an unrecognized footer
+    type fails loudly instead of guessing."""
     footer = _footer_type(path, col)
     if footer != "timestamp[ns]":
         raise TypeError(
@@ -126,6 +159,11 @@ def _ns_bigint_to_ts(path: str, col: str):
             "guess a timestamp scale; update spark_hive_spark.tables and "
             "FIXTURES.md for the new fixture physical type"
         )
+
+
+def _nanos_to_ts(col: str):
+    """Column expr converting a nanosAsLong bigint to TIMESTAMP,
+    truncating to microseconds as DuckDB does."""
     return F.expr(f"timestamp_micros({col} div 1000)")
 
 
@@ -137,6 +175,12 @@ _TS_COLS: dict[str, tuple[str, ...]] = {
     "events": ("ts",),
 }
 
+# Inferred fixture schemas (see _read): (path, st_mtime_ns, st_size) ->
+# (schema, bigint columns whose footer declares TIMESTAMP(NANOS)).
+# Threads that miss on one key at once each infer it and store equal
+# values, so the memo needs no lock.
+_SCHEMAS: dict[tuple[str, int, int], tuple[StructType, tuple[str, ...]]] = {}
+
 
 def _normalize_event_ts(df: DataFrame, path: str | None = None):
     """Column expression normalizing events.ts to TIMESTAMP regardless
@@ -146,8 +190,8 @@ def _normalize_event_ts(df: DataFrame, path: str | None = None):
     kind = df.schema["ts"].dataType.simpleString()
     if kind == "bigint":  # TIMESTAMP(NANOS) read via nanosAsLong
         if path is not None:
-            return _ns_bigint_to_ts(path, "ts")
-        return F.expr("timestamp_micros(ts div 1000)")
+            _check_ns_footer(path, "ts")
+        return _nanos_to_ts("ts")
     return F.col("ts").cast("timestamp")
 
 

@@ -77,27 +77,53 @@ def test_nanos_drift_any_date_column(spark, tmp_path):
     timestamp column as parquet TIMESTAMP(NANOS) (as happened to
     events.ts between rounds 5 and 6), the loader must read it as
     nanos-as-long and convert — for every table in _TS_COLS, not just
-    events."""
+    events.
+
+    Reads go through the loader's schema memo: a second read of the
+    same file (memo hit, conf unset again) must still convert; a
+    rewritten file must be inferred afresh, never served the old
+    schema; and a plain int64 the footer guard refuses is never
+    memoised, so it is refused on every read."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.types import TimestampType
 
     from spark_hive_spark.tables import _read
 
-    tbl = pa.table(
-        {
-            "o_orderkey": pa.array([1, 2], pa.int64()),
-            "o_orderdate": pa.array(
-                [1700000000000000000, 1700000086400000000000 % 2**62],
-                pa.timestamp("ns"),
-            ),
-            "o_totalprice": pa.array([10.0, 20.0]),
-        }
+    def write(orderdate, **extra):
+        tbl = pa.table(
+            {
+                "o_orderkey": pa.array([1, 2], pa.int64()),
+                "o_orderdate": orderdate,
+                "o_totalprice": pa.array([10.0, 20.0]),
+                **extra,
+            }
+        )
+        pq.write_table(tbl, str(tmp_path / "orders.parquet"), version="2.6")
+
+    def read_converted():
+        _unset(spark)
+        df = _read(spark, str(tmp_path), "orders")
+        assert isinstance(df.schema["o_orderdate"].dataType, TimestampType)
+        rows = df.orderBy("o_orderkey").collect()
+        # nanos 1700000000000000000 -> micros 1700000000000000 (UTC
+        # 2023-11-14T22:13:20)
+        assert rows[0].o_orderdate.year == 2023 and rows[0].o_orderdate.second == 20
+        return df
+
+    nanos = pa.array(
+        [1700000000000000000, 1700000086400000000000 % 2**62],
+        pa.timestamp("ns"),
     )
-    pq.write_table(tbl, str(tmp_path / "orders.parquet"), version="2.6")
-    df = _read(spark, str(tmp_path), "orders")
-    assert isinstance(df.schema["o_orderdate"].dataType, TimestampType)
-    rows = df.orderBy("o_orderkey").collect()
-    # nanos 1700000000000000000 -> micros 1700000000000000 (UTC
-    # 2023-11-14T22:13:20)
-    assert rows[0].o_orderdate.year == 2023 and rows[0].o_orderdate.second == 20
+    write(nanos)
+    read_converted()  # infers the schema
+    read_converted()  # memo hit
+
+    write(nanos, o_comment=pa.array(["a", "b"]))
+    assert "o_comment" in read_converted().columns
+
+    # epoch days as plain int64: also bigint to Spark, but no nanos scale
+    write(pa.array([19675, 19676], pa.int64()))
+    for _ in range(2):
+        with pytest.raises(TypeError, match="refusing to guess"):
+            _read(spark, str(tmp_path), "orders")
